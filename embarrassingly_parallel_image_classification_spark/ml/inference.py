@@ -260,27 +260,35 @@ def q_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The M0 end-to-end query: score → join truth → confusion counts +
-    per-class accuracy. Fuses the reference's scoring notebook and its
-    evaluation notebook into one lazy plan."""
-    scored = score_embeddings(spark, sf_dir)
-    per_class = (
-        scored.groupBy("label")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(F.col("pred") == F.col("label"), 1).otherwise(0)).alias("n_correct"),
-        )
-        .withColumn("class_accuracy", F.round(F.col("n_correct") / F.col("n"), 6))
+    """The M0 end-to-end query: score → confusion counts → per-class
+    accuracy. Fuses the reference's scoring notebook and its evaluation
+    notebook into one lazy plan.
+
+    Single pass: the embeddings are scanned and scored once, into the
+    (label, pred) confusion counts (at most classes² rows), and every
+    per-class figure folds from that small frame. Deriving two
+    aggregates from ``scored`` and joining them would scan the table
+    and run the Arrow UDF twice per row."""
+    confusion = score_embeddings(spark, sf_dir).groupBy("label", "pred").agg(
+        F.count("*").alias("n_pred")
     )
-    confusion = scored.groupBy("label", "pred").agg(F.count("*").alias("n_pred"))
-    top_confusion = (
-        confusion.filter(F.col("label") != F.col("pred"))
-        .groupBy("label")
-        .agg(F.max("n_pred").alias("max_confused_n"))
-    )
+    hit = F.col("pred") == F.col("label")
     return (
-        per_class.join(top_confusion, "label", "left")
-        .na.fill({"max_confused_n": 0})
+        confusion.groupBy("label")
+        .agg(
+            # coalesce keeps n non-nullable, like the count(*) it sums
+            F.coalesce(F.sum("n_pred"), F.lit(0)).alias("n"),
+            F.sum(F.when(hit, F.col("n_pred")).otherwise(0)).alias("n_correct"),
+            # a class with no wrong predictions has no pred ≠ label row
+            F.coalesce(F.max(F.when(~hit, F.col("n_pred"))), F.lit(0)).alias("max_confused_n"),
+        )
+        .select(
+            "label",
+            "n",
+            "n_correct",
+            F.round(F.col("n_correct") / F.col("n"), 6).alias("class_accuracy"),
+            "max_confused_n",
+        )
         .orderBy("label")
     )
 

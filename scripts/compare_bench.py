@@ -46,7 +46,8 @@ def main() -> None:
     if not common:
         print("no common queries")
         return
-    ratios = {q: now[q] / prev[q] for q in common if prev[q] > 0}
+    # a timing that rounds to 0 on either side has no meaningful ratio
+    ratios = {q: now[q] / prev[q] for q in common if prev[q] > 0 and now[q] > 0}
     geomean = math.exp(sum(math.log(r) for r in ratios.values()) / len(ratios))
     improved = sorted(
         (q for q, r in ratios.items() if r < 0.9), key=lambda q: ratios[q]
@@ -54,6 +55,9 @@ def main() -> None:
     regressed = sorted(
         (q for q, r in ratios.items() if r > 1.1), key=lambda q: -ratios[q]
     )
+    # frozen comparators: sum both sides over the members BOTH records hold
+    subsets = {"subset22": SUBSET22, "subset38": SUBSET38}
+    shared = {k: [q for q in members if q in prev and q in now] for k, members in subsets.items()}
     out = {
         "n_common": len(common),
         "prev_total_common": round(sum(prev[q] for q in common), 3),
@@ -66,12 +70,15 @@ def main() -> None:
         "n_regressed_gt10pct": len(regressed),
         "dropped": sorted(set(prev) - set(now)),
         "added": sorted(set(now) - set(prev)),
-        "subset22_prev": round(sum(prev[q] for q in SUBSET22 if q in prev), 3),
-        "subset22_now": round(sum(now[q] for q in SUBSET22 if q in now), 3),
-        "subset38_prev": round(sum(prev[q] for q in SUBSET38 if q in prev), 3),
-        "subset38_now": round(sum(now[q] for q in SUBSET38 if q in now), 3),
     }
+    for k, qs in shared.items():
+        out[f"{k}_prev"] = round(sum(prev[q] for q in qs), 3)
+        out[f"{k}_now"] = round(sum(now[q] for q in qs), 3)
     print(json.dumps(out, indent=2))
+    for k, members in subsets.items():
+        missing = [q for q in members if q not in shared[k]]
+        if missing:
+            print(f"\n{k}: missing from a record, left out of both sums: {missing}")
     print("\nregressed >10% (worst first):")
     for q in regressed:
         print(f"  {ratios[q]:6.2f}x  {prev[q]:7.3f} -> {now[q]:7.3f}  {q}")

@@ -70,16 +70,32 @@ def runner(data_dir: str, cpus: str, names: list[str]) -> None:
     spark = get_spark(f"core-scaling-{cpus}")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
+    failed: dict[str, str] = {}
+
+    def run(n: str) -> float | None:
+        """One noop-sink run of ``n``; a failure is recorded against the
+        query so the other queries of this core count still report."""
+        t0 = time.time()
+        try:
+            qs[n](spark, data_dir).write.format("noop").mode("overwrite").save()
+        except Exception as ex:  # noqa: BLE001 — isolate any per-query failure
+            failed[n] = f"{type(ex).__name__}: {str(ex)[:200]}"
+            return None
+        return time.time() - t0
+
     for n in names:  # untimed warm pass (JIT, footers, python workers)
-        qs[n](spark, data_dir).write.format("noop").mode("overwrite").save()
+        run(n)
     best: dict[str, float] = {}
     for _ in range(PASSES):
         for n in names:
+            if n in failed:
+                continue
             spark.sparkContext.setJobDescription(f"core{cpus}:{n}")
-            t0 = time.time()
-            qs[n](spark, data_dir).write.format("noop").mode("overwrite").save()
-            best[n] = min(best.get(n, float("inf")), time.time() - t0)
-    print("CORE_SCALING_RESULT " + json.dumps({n: round(v, 3) for n, v in best.items()}))
+            dt = run(n)
+            if dt is not None:
+                best[n] = min(best.get(n, float("inf")), dt)
+    result = {"best": {n: round(v, 3) for n, v in best.items()}, "failed": failed}
+    print("CORE_SCALING_RESULT " + json.dumps(result))
     spark.stop()
 
 
@@ -104,6 +120,7 @@ def main() -> None:
     spark.stop()
 
     results: dict[str, dict[str, float]] = {}
+    failed: dict[str, dict[str, str]] = {}
     try:
         for cpus in ("32", "8"):
             env = dict(os.environ)
@@ -125,7 +142,8 @@ def main() -> None:
                 print(out.stdout[-3000:])
                 print(out.stderr[-3000:])
                 raise RuntimeError(f"runner cpus={cpus} produced no result")
-            results[cpus] = json.loads(line[-1].split(" ", 1)[1])
+            rec = json.loads(line[-1].split(" ", 1)[1])
+            results[cpus], failed[cpus] = rec["best"], rec["failed"]
     finally:
         shutil.rmtree(blow, ignore_errors=True)
 
@@ -133,12 +151,19 @@ def main() -> None:
     print("|---|---|---|---|")
     rows = []
     for n in names:
-        t32, t8 = results["32"][n], results["8"][n]
-        ratio = t8 / t32 if t32 > 0 else float("nan")
-        rows.append({"query": n, "t32": round(t32, 3), "t8": round(t8, 3),
-                     "ratio": round(ratio, 3)})
-        print(f"| {n} | {t32:.2f} | {t8:.2f} | {ratio:.2f} |")
-    print(json.dumps({"metric": "core_scaling", "k": k, "rows": rows}))
+        t32, t8 = results["32"].get(n), results["8"].get(n)
+        ratio = t8 / t32 if t32 and t8 is not None else None
+        rows.append({"query": n, "t32": t32, "t8": t8,
+                     "ratio": None if ratio is None else round(ratio, 3)})
+        print(f"| {n} | {_cell(t32)} | {_cell(t8)} | {_cell(ratio)} |")
+    for cpus, errs in failed.items():
+        for n, err in errs.items():
+            print(f"failed at {cpus} cores: {n}: {err}")
+    print(json.dumps({"metric": "core_scaling", "k": k, "rows": rows, "failed": failed}))
+
+
+def _cell(t: float | None) -> str:
+    return "n/a" if t is None else f"{t:.2f}"
 
 
 if __name__ == "__main__":

@@ -53,6 +53,78 @@ def test_inference_matches_numpy_oracle(spark):
     assert acc > 0.15, f"nearest-centroid accuracy at/below chance: {acc}"
 
 
+def test_flagship_matches_numpy_oracle(spark):
+    """Per-class n / n_correct / max_confused_n of the flagship must
+    EQUAL counts over local NumPy predictions on the same parquet, and
+    class_accuracy must be their rounded ratio. The final adaptive plan
+    must scan the table once and cross the Arrow boundary once: a
+    second ArrowEvalPython or FileScan means every row is scored twice."""
+    from embarrassingly_parallel_image_classification_spark.ml.inference import (
+        fit_centroids,
+        flagship,
+        nearest_centroid_predict,
+    )
+    from embarrassingly_parallel_image_classification_spark.sources.tables import t
+
+    cents, labels = fit_centroids(t(spark, SF_SMOKE, "embeddings"))
+    pdf = pq.read_table(f"{SF_SMOKE}/embeddings.parquet").to_pandas()
+    y = pdf["label"].to_numpy()
+    pred = nearest_centroid_predict(np.stack(pdf["embedding"].to_numpy()), cents, labels)
+    want = {}
+    for c in np.unique(y):
+        mine = pred[y == c]
+        wrong = mine[mine != c]
+        want[int(c)] = (
+            int(mine.size),
+            int((mine == c).sum()),
+            int(np.bincount(wrong).max()) if wrong.size else 0,
+        )
+
+    df = flagship(spark, SF_SMOKE)
+    rows = df.collect()
+    assert [r["label"] for r in rows] == sorted(want)
+    got = {r["label"]: (r["n"], r["n_correct"], r["max_confused_n"]) for r in rows}
+    assert got == want
+    for r in rows:
+        assert abs(r["class_accuracy"] - r["n_correct"] / r["n"]) <= 1e-6, r
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, plan
+    assert final.count("ArrowEvalPython") == 1, final
+    assert final.count("FileScan parquet") == 1, final
+
+
+def test_flagship_perfectly_separable(spark, tmp_path):
+    """Degenerate input: no row is misclassified, so no class has a
+    pred ≠ label confusion cell. max_confused_n must read 0 (not NULL)
+    and every class_accuracy 1.0."""
+    import pyarrow as pa
+
+    from embarrassingly_parallel_image_classification_spark.ml.inference import flagship
+
+    y = np.repeat(np.arange(3, dtype=np.int32), 4)
+    X = 10.0 * np.eye(4, dtype=np.float32)[y] + 0.01 * np.arange(y.size, dtype=np.float32)[:, None]
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(np.arange(y.size, dtype=np.int64)),
+                "embedding": pa.array(list(X), type=pa.list_(pa.float32())),
+                "label": pa.array(y),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+
+    rows = flagship(spark, str(tmp_path)).collect()
+    assert [(r["label"], r["n"], r["n_correct"], r["max_confused_n"]) for r in rows] == [
+        (0, 4, 4, 0),
+        (1, 4, 4, 0),
+        (2, 4, 4, 0),
+    ]
+    assert all(r["class_accuracy"] == 1.0 for r in rows)
+
+
 def test_predict_batch_udf_agrees_with_iterator_udf(spark):
     """The two J1 formulations (Iterator pandas UDF vs
     pyspark.ml predict_batch_udf) must produce identical predictions."""
